@@ -30,6 +30,7 @@ from typing import NamedTuple, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_timeseries_spark.operators import index_store as ist
 from orange3_timeseries_spark.operators.hashing import phash
 from orange3_timeseries_spark.operators.partitioning import widen_partitions
 from orange3_timeseries_spark.operators.text import tokens_expr
@@ -987,77 +988,51 @@ def lsh_build_index(docs: DataFrame, *, text_col: str = "text",
                     text_col)
 
 
-def write_lsh_index(index: LshIndex, path: str) -> None:
-    """Persist the index as three parquet state tables (overwrite):
-    ``entries`` partitioned by ``bucket`` (probe-time bucket filters
-    become parquet PartitionFilters), ``docs`` partitioned by an
-    id-hash bucket ``dbucket`` (the VERIFY join prunes to the
-    colliding candidates' buckets instead of rescanning the whole
-    indexed text — the dominant bytes at scale), ``params`` one row
-    recording the banding scheme so a reader probes with the SAME
-    (k, bands, n, hash family) the index was built with.
+def _lsh_docs(index: LshIndex) -> DataFrame:
+    # the id-hash bucket lets a probe's VERIFY join prune the indexed
+    # text (the dominant bytes at scale) to the colliding candidates
+    return index.docs.select(index.id_col, index.text_col).withColumn(
+        "dbucket", F.pmod(F.xxhash64(F.col(index.id_col)),
+                          F.lit(index.n_buckets)).cast("int"))
 
-    The write lands in a FRESH generation directory ``path/v=<n>`` and
-    atomically swaps the ``path/_CURRENT`` pointer
-    (operators/index_store.py) — read→merge→write on the same logical
-    path is supported, and a crash mid-write leaves readers on the
-    last complete generation."""
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-        run_concurrent,
-        write_small_table,
-    )
 
-    root = path
-    path = begin_version(root)
-    # entries/docs are appendable: base data under <table>/delta=0
-    # (the journaled layout — appends become partition dirs of the
-    # SAME scan).  The two writes are independent — overlap them
-    # (guide §2.6)
-    dbucket = F.pmod(F.xxhash64(F.col(index.id_col)),
-                     F.lit(index.n_buckets)).cast("int")
-    run_concurrent(
-        lambda: (index.entries.repartition("bucket")
-                 .write.mode("overwrite").partitionBy("bucket")
-                 .parquet(base_table_path(path, "entries"))),
-        lambda: (index.docs.withColumn("dbucket", dbucket)
-                 .repartition("dbucket")
-                 .write.mode("overwrite").partitionBy("dbucket")
-                 .parquet(base_table_path(path, "docs"))))
-    spark = index.entries.sparkSession
-    write_small_table(
-        spark, os.path.join(path, "params"),
-        [(index.k, index.bands, index.n, index.n_buckets,
-          index.hash_family, index.id_col, index.text_col)],
+def _lsh_load(spark, vpath, tables) -> LshIndex:
+    p = ist.read_small_table_row(spark, os.path.join(vpath, "params"))
+    return LshIndex(tables["entries"], tables["docs"], int(p.k),
+                    int(p.bands), int(p.n), int(p.n_buckets),
+                    p.hash_family, p.id_col, p.text_col)
+
+
+_DUP_BANDS = ("duplicate its band entries and self-pair on every later "
+              "probe")
+LSH_SPEC = ist.IndexSpec(
+    "lsh", (ist.StateTable("entries", "bucket"),
+            ist.StateTable("docs", "dbucket", frame=_lsh_docs)),
+    small_tables=lambda ix: [(
+        "params", [(ix.k, ix.bands, ix.n, ix.n_buckets, ix.hash_family,
+                    ix.id_col, ix.text_col)],
         "k int, bands int, n int, n_buckets int, hash_family string,"
-        " id_col string, text_col string")
-    commit_version(root, path)
+        " id_col string, text_col string")],
+    load=_lsh_load,
+    delta=lambda base, new_docs: lsh_build_index(
+        new_docs, text_col=base.text_col, id_col=base.id_col, k=base.k,
+        bands=base.bands, n=base.n, n_buckets=base.n_buckets,
+        hash_family=base.hash_family),
+    guard=("docs", None, _DUP_BANDS))
+
+
+def write_lsh_index(index: LshIndex, path: str) -> None:
+    """Persist the index as the next generation of ``path``: ``entries``
+    partitioned by ``bucket``, ``docs`` by the id-hash ``dbucket``, and
+    a params row with the banding scheme, so readers probe with the SAME
+    (k, bands, n, hash family)."""
+    ist.write_index(LSH_SPEC, index, path)
 
 
 def read_lsh_index(spark, path: str) -> LshIndex:
-    """Load a persisted index.  Only the one-row params table is read
-    eagerly; entries/docs stay lazy until a probe runs.  ``path`` is
-    the logical root — the ``_CURRENT`` generation pointer resolves
-    first (operators/index_store.py), bare layout fallback."""
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    from orange3_timeseries_spark.operators.index_store import (
-        read_small_table_row,
-    )
-    p = read_small_table_row(spark, os.path.join(path, "params"))
-    # entries/docs union COMMITTED journaled append deltas — a torn
-    # append is invisible (index_store.read_index_table)
-    return LshIndex(
-        read_index_table(spark, path, "entries"),
-        read_index_table(spark, path, "docs"),
-        int(p.k), int(p.bands), int(p.n), int(p.n_buckets),
-        p.hash_family, p.id_col, p.text_col)
+    """Load the current generation of ``path``; only the params row is
+    read eagerly."""
+    return ist.read_index(LSH_SPEC, spark, path)
 
 
 def lsh_probe_index(index: LshIndex, new_docs: DataFrame, *,
@@ -1135,115 +1110,28 @@ def lsh_probe_index(index: LshIndex, new_docs: DataFrame, *,
 
 def lsh_merge_index(base: LshIndex, new_docs: DataFrame, *,
                     check_disjoint: bool = True) -> LshIndex:
-    """Fold an ingested batch INTO the index without rebuilding it —
-    the maintenance path of a dedup-at-ingest service (probe first,
-    then merge the survivors).  Band entries are per-doc independent,
-    so a merge is exactly a delta signature pass + append: merged
-    state == rebuilt state row-for-row.  Caller contract: ``new_docs``
-    ids are disjoint from the indexed ones — a re-ingested id would
-    duplicate its entries and self-pair on every later probe.
-    ``check_disjoint`` (default True) enforces this LOUDLY with a
-    semi-join of the new ids into the indexed docs (one early-exit
-    scan at merge time, the same fail-loud rule as
-    ``bm25_merge_index``)."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col, text_col = base.id_col, base.text_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.docs, new_docs, id_col, "lsh_merge_index",
-            "duplicate its band entries and self-pair on every later "
-            "probe")
-    delta = lsh_build_index(new_docs, text_col=text_col, id_col=id_col,
-                            k=base.k, bands=base.bands, n=base.n,
-                            n_buckets=base.n_buckets,
-                            hash_family=base.hash_family)
-    return LshIndex(
-        base.entries.select(id_col, "band", "band_key", "bucket")
-        .unionByName(delta.entries.select(id_col, "band", "band_key",
-                                          "bucket")),
-        # explicit projection: docs READ from a persisted index carry
-        # the dbucket partition column, fresh deltas do not
-        base.docs.select(id_col, text_col)
-        .unionByName(delta.docs.select(id_col, text_col)),
-        base.k, base.bands, base.n, base.n_buckets, base.hash_family,
-        id_col, text_col)
+    """Fold an ingested batch INTO the index (probe first, then merge
+    the survivors): band entries are per-doc, so one delta signature
+    pass plus a union equals a rebuild row for row.  ``check_disjoint``
+    rejects an already indexed id LOUDLY — it would self-pair on every
+    later probe."""
+    return ist.merge_index(LSH_SPEC, base, new_docs, check_disjoint)
 
 
 def lsh_append_index(spark, path: str, new_docs: DataFrame, *,
                      check_disjoint: bool = True) -> None:
-    """FAST-INGEST append for a persisted LSH index: sign the delta
-    under the persisted banding scheme and land its band entries and
-    docs as a JOURNALED DELTA (``v=<n>/delta=<k>`` + per-delta
-    ``_COMMITTED`` marker, same contract as ``bm25_append_index``) —
-    ingest IO proportional to the batch, never the corpus
-    (``lsh_merge_index`` + ``write_lsh_index`` computes the same delta
-    but rewrites the full entries/docs state into a new generation),
-    and crash-atomic: an unmarked delta is invisible, the pre-append
-    state keeps probing.  Band entries and docs are pure per-doc rows
-    and readers union committed deltas, so an appended index probes
-    identically to a rebuild.  One delta dir per ingest accumulates
-    until ``compact_lsh_index`` resets it.  The expected cadence of a
-    dedup-at-ingest service: probe → append survivors → compact on a
+    """FAST-INGEST append: sign the batch under the persisted scheme and
+    land entries and docs as a JOURNALED DELTA — batch-proportional IO,
+    invisible until its marker lands, probes identical to a rebuild.
+    Cadence: probe → append survivors → :func:`compact_lsh_index` on a
     schedule."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path),
-                             ("entries", "docs"))
-    base = read_lsh_index(spark, path)
-    id_col, text_col = base.id_col, base.text_col
-    delta = lsh_build_index(new_docs, text_col=text_col, id_col=id_col,
-                            k=base.k, bands=base.bands, n=base.n,
-                            n_buckets=base.n_buckets,
-                            hash_family=base.hash_family)
-    dpath = begin_delta(path)
-    dbucket = F.pmod(F.xxhash64(F.col(id_col)),
-                     F.lit(base.n_buckets)).cast("int")
-    # the disjointness gate and the two delta-table writes are
-    # independent — overlap all three (guide §2.6); the commit marker
-    # lands strictly after the check passes and both writes complete,
-    # and a failed check aborts the (invisible) delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.docs, new_docs, id_col, "lsh_append_index",
-                "duplicate its band entries and self-pair on every "
-                "later probe")) if check_disjoint else None,
-            lambda: (delta.entries.repartition("bucket")
-                     .write.mode("overwrite").partitionBy("bucket")
-                     .parquet(delta_table_path(dpath, "entries"))),
-            lambda: (delta.docs.select(id_col, text_col)
-                     .withColumn("dbucket", dbucket)
-                     .repartition("dbucket").write.mode("overwrite")
-                     .partitionBy("dbucket")
-                     .parquet(delta_table_path(dpath, "docs"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    ist.append_index(LSH_SPEC, spark, path, new_docs, check_disjoint)
 
 
 def compact_lsh_index(spark, path: str) -> None:
-    """Rewrite the current LSH generation into a fresh one and swap the
-    pointer: the versioned write repartitions entries by ``bucket`` and
-    docs by ``dbucket``, collapsing the per-ingest delta files back to
-    ~1 per partition.  Probes are row-identical before/after."""
-    write_lsh_index(read_lsh_index(spark, path), path)
+    """Rewrite the current generation into a fresh one (~1 file per
+    partition again); probes are row-identical before/after."""
+    ist.compact_index(LSH_SPEC, spark, path)
 
 
 # ---------------------------------------------- persisted SimHash dedup index
@@ -1315,55 +1203,36 @@ def simhash_build_index(docs: DataFrame, *, text_col: str = "text",
         bits, band_bits, n_buckets, id_col, text_col)
 
 
-def write_simhash_index(index: SimHashIndex, path: str) -> None:
-    """Persist the index into a FRESH generation directory
-    ``path/v=<n>`` and atomically swap the ``path/_CURRENT`` pointer
-    (operators/index_store.py): entries partitioned by ``bucket``, one
-    params row recording the banding scheme."""
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-    )
+def _simhash_load(spark, vpath, tables) -> SimHashIndex:
+    p = ist.read_small_table_row(spark, os.path.join(vpath, "params"))
+    return SimHashIndex(tables["entries"], int(p.bits), int(p.band_bits),
+                        int(p.n_buckets), p.id_col, p.text_col)
 
-    root = path
-    path = begin_version(root)
-    # entries are appendable: base data under entries/delta=0
-    (index.entries.repartition("bucket").write.mode("overwrite")
-     .partitionBy("bucket").parquet(base_table_path(path, "entries")))
-    spark = index.entries.sparkSession
-    from orange3_timeseries_spark.operators.index_store import (
-        write_small_table,
-    )
-    write_small_table(
-        spark, os.path.join(path, "params"),
-        [(index.bits, index.band_bits, index.n_buckets, index.id_col,
-          index.text_col)],
+
+SIMHASH_SPEC = ist.IndexSpec(
+    "simhash", (ist.StateTable("entries", "bucket"),),
+    small_tables=lambda ix: [(
+        "params", [(ix.bits, ix.band_bits, ix.n_buckets, ix.id_col,
+                    ix.text_col)],
         "bits int, band_bits int, n_buckets int, id_col string,"
-        " text_col string")
-    commit_version(root, path)
+        " text_col string")],
+    load=_simhash_load,
+    delta=lambda base, new_docs: base._replace(entries=_simhash_entries(
+        new_docs, base.text_col, base.id_col, base.bits, base.band_bits,
+        base.n_buckets)),
+    guard=("entries", None, _DUP_BANDS))
+
+
+def write_simhash_index(index: SimHashIndex, path: str) -> None:
+    """Persist the index as the next generation of ``path``: entries
+    partitioned by ``bucket``, a params row with the banding scheme."""
+    ist.write_index(SIMHASH_SPEC, index, path)
 
 
 def read_simhash_index(spark, path: str) -> SimHashIndex:
-    """Load a persisted index; only the one-row params table is read
-    eagerly.  ``path`` is the logical root — the ``_CURRENT``
-    generation pointer resolves first, bare layout fallback."""
-    from orange3_timeseries_spark.operators.index_store import (
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        read_small_table_row,
-    )
-    p = read_small_table_row(spark, os.path.join(path, "params"))
-
-    # entries union COMMITTED journaled append deltas
-    return SimHashIndex(
-        read_index_table(spark, path, "entries"),
-        int(p.bits), int(p.band_bits), int(p.n_buckets), p.id_col,
-        p.text_col)
+    """Load the current generation of ``path``; only the params row is
+    read eagerly."""
+    return ist.read_index(SIMHASH_SPEC, spark, path)
 
 
 def simhash_probe_index(index: SimHashIndex, new_docs: DataFrame, *,
@@ -1408,77 +1277,20 @@ def simhash_probe_index(index: SimHashIndex, new_docs: DataFrame, *,
 
 def simhash_merge_index(base: SimHashIndex, new_docs: DataFrame, *,
                         check_disjoint: bool = True) -> SimHashIndex:
-    """Fold an ingested batch INTO the index without rebuilding it:
-    signatures are per-doc, so the merge is one delta signature pass +
-    append — merged state == rebuilt state row-for-row.  Same loud
-    disjoint-ids guard as every index family."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.entries, new_docs, id_col, "simhash_merge_index",
-            "duplicate its band entries and self-pair on every later "
-            "probe")
-    delta = _simhash_entries(new_docs, base.text_col, id_col,
-                             base.bits, base.band_bits, base.n_buckets)
-    cols = [id_col, "sig", "band", "band_key", "bucket"]
-    return SimHashIndex(
-        base.entries.select(*cols).unionByName(delta.select(*cols)),
-        base.bits, base.band_bits, base.n_buckets, id_col,
-        base.text_col)
+    """Fold an ingested batch INTO the index: signatures are per-doc, so
+    one delta signature pass plus a union equals a rebuild row for row.
+    Same loud disjoint-ids guard as every family."""
+    return ist.merge_index(SIMHASH_SPEC, base, new_docs, check_disjoint)
 
 
 def simhash_append_index(spark, path: str, new_docs: DataFrame, *,
                          check_disjoint: bool = True) -> None:
-    """FAST-INGEST append for a persisted SimHash index: sign the
-    delta under the persisted scheme and land its entry rows as a
-    JOURNALED DELTA — same contract and trade-offs as
-    ``lsh_append_index`` (delta-proportional IO, crash-atomic via the
-    per-delta ``_COMMITTED`` marker, fragments until
-    ``compact_simhash_index``)."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path), ("entries",))
-    base = read_simhash_index(spark, path)
-    delta = _simhash_entries(new_docs, base.text_col, base.id_col,
-                             base.bits, base.band_bits, base.n_buckets)
-    dpath = begin_delta(path)
-    # disjointness gate and delta write overlap (guide §2.6); commit
-    # is still gated on the check, failure aborts the invisible delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.entries, new_docs, base.id_col,
-                "simhash_append_index",
-                "duplicate its band entries and self-pair on every "
-                "later probe")) if check_disjoint else None,
-            lambda: (delta.repartition("bucket").write.mode("overwrite")
-                     .partitionBy("bucket")
-                     .parquet(delta_table_path(dpath, "entries"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    """FAST-INGEST append, same contract as :func:`lsh_append_index`;
+    fragments until :func:`compact_simhash_index`."""
+    ist.append_index(SIMHASH_SPEC, spark, path, new_docs, check_disjoint)
 
 
 def compact_simhash_index(spark, path: str) -> None:
-    """Rewrite the current SimHash generation into a fresh one and
-    swap the pointer, collapsing per-ingest delta files back to ~1 per
-    bucket partition.  Probes are row-identical before/after."""
-    write_simhash_index(read_simhash_index(spark, path), path)
+    """Rewrite the current generation into a fresh one (~1 file per
+    bucket again); probes are row-identical before/after."""
+    ist.compact_index(SIMHASH_SPEC, spark, path)

@@ -35,8 +35,27 @@ root has no committed generation at all), so:
   the last committed generation (tests/test_index_store.py asserts this
   for all index families);
 - **compaction is just a rewrite**: read the current generation,
-  rewrite its partitions into the next one, swap the pointer
-  (``compact_*_index`` in each family module).
+  rewrite its partitions into the next one, swap the pointer.
+
+**One lifecycle kernel.**  :func:`write_index`, :func:`read_index`,
+:func:`merge_index`, :func:`append_index` and :func:`compact_index`
+implement the contract once.  A family is an :class:`IndexSpec`
+defined next to its build and serve kernels, and its public
+``write_*``/``read_*``/``*_merge_*``/``*_append_*``/``compact_*``
+functions are thin wrappers over the kernel.  The six specs:
+
+=======  ================================  ====================  =============
+family   appendable tables (partition)     driver-side tables    guard ids
+=======  ================================  ====================  =============
+BM25     postings, token_df (bucket),      params                postings
+         stats (derived by a hook)
+LSH      entries (bucket), docs (dbucket)  params                docs
+SimHash  entries (bucket)                  params                entries
+IVF      lists (centroid_id)               centroids, params     lists.nn_id
+PQ       codes (unpartitioned)             codebooks             codes.nn_id
+IVF-PQ   entries (centroid_id)             centroids, codebooks  entries.nn_id
+                                           params
+=======  ================================  ====================  =============
 
 **Fast-ingest appends are journaled deltas** (``begin_delta`` /
 ``commit_delta``): every appendable state table carries ``delta`` as
@@ -120,7 +139,7 @@ import re
 import shutil
 import tempfile
 import uuid
-from typing import List, Optional, Tuple
+from typing import Callable, List, NamedTuple, Optional, Tuple
 
 __all__ = ["begin_version", "commit_version", "abort_version",
            "resolve_index_path",
@@ -1206,3 +1225,163 @@ def read_small_table_rows(spark, path: str):
 
 __all__ += ["run_concurrent", "write_small_table",
             "read_small_table_row", "read_small_table_rows"]
+
+
+# ------------------------------------------------------------ lifecycle kernel
+class StateTable(NamedTuple):
+    """An appendable state table: base rows under ``<table>/delta=0``,
+    appends under ``<table>/delta=<k>``."""
+
+    name: str
+    #: parquet partition column (serve-time prune key); None = plain
+    partition: Optional[str] = None
+    #: merge step for a table that is not a plain row union
+    fold: Optional[Callable] = None
+    #: index -> DataFrame to write, if not the same-named attribute
+    frame: Optional[Callable] = None
+
+
+class IndexSpec(NamedTuple):
+    """One family, as the lifecycle kernel sees it."""
+
+    #: names the guard's caller in its error: ``<family>_<op>_index``
+    family: str
+    tables: Tuple[StateTable, ...]
+    #: index -> [(name, rows, ddl)] of driver-written tables, computed
+    #: before the state-table writes
+    small_tables: Callable
+    #: (spark, vpath, {table: DataFrame}, **kw) -> index
+    load: Callable
+    #: (base, new_rows, **kw) -> index of the batch alone, built under
+    #: the base's frozen models — merge and append share it
+    delta: Callable
+    #: (table, id column or None for id_col, consequence) of the guard
+    guard: Tuple[str, Optional[str], str]
+    #: (index, table_path, guard) -> None, replacing the generic wave
+    write_tables: Optional[Callable] = None
+
+
+def write_table(df, table: StateTable, path: str,
+                compact: bool = False) -> None:
+    """Write one state table, partitioned by its partition column; an
+    unpartitioned one is re-widened by bytes when compacting, so append
+    fragments coalesce."""
+    if table.partition is not None:
+        (df.repartition(table.partition).write.mode("overwrite")
+         .partitionBy(table.partition).parquet(path))
+        return
+    if compact:
+        from orange3_timeseries_spark.operators.partitioning import (
+            scaled_width,
+        )
+        df = df.repartition(scaled_width(df))
+    df.write.mode("overwrite").parquet(path)
+
+
+def _frame(table: StateTable, index):
+    return table.frame(index) if table.frame else getattr(index,
+                                                          table.name)
+
+
+def _write_state(spec: IndexSpec, index, table_path, guard=None,
+                 compact: bool = False) -> None:
+    # ONE concurrent wave: the append's guard plus one write per table
+    if spec.write_tables is not None:
+        spec.write_tables(index, table_path, guard)
+        return
+    run_concurrent(guard, *[
+        (lambda t=t: write_table(_frame(t, index), t, table_path(t.name),
+                                 compact))
+        for t in spec.tables])
+
+
+def _check_disjoint(spec: IndexSpec, base, new_rows, op: str) -> None:
+    from pyspark.sql import functions as F
+
+    from orange3_timeseries_spark.operators.audit import (
+        check_disjoint_ids,
+    )
+
+    table, col, consequence = spec.guard
+    ids = getattr(base, table)
+    if col is not None:
+        ids = ids.select(F.col(col).alias(base.id_col))
+    check_disjoint_ids(ids, new_rows, base.id_col,
+                       f"{spec.family}_{op}_index", consequence)
+
+
+def write_index(spec: IndexSpec, index, path: str,
+                compact: bool = False) -> None:
+    """Persist ``index`` as the next generation of ``path`` and swap
+    the pointer.  A failed table write aborts the generation, so a
+    retry allocates the same number."""
+    vdir = begin_version(path)
+    try:
+        small = spec.small_tables(index)
+        _write_state(spec, index, lambda t: base_table_path(vdir, t),
+                     compact=compact)
+        spark = _frame(spec.tables[0], index).sparkSession
+        for name, rows, ddl in small:
+            write_small_table(spark, _join(vdir, name), rows, ddl)
+    except BaseException:
+        abort_version(path, vdir)
+        raise
+    commit_version(path, vdir)
+
+
+def read_index(spec: IndexSpec, spark, path: str, **kw):
+    """The current generation of ``path``: lazy state tables (committed
+    deltas only) plus the family's eagerly loaded small tables."""
+    vpath = resolve_index_path(path)
+    return spec.load(spark, vpath,
+                     {t.name: read_index_table(spark, vpath, t.name)
+                      for t in spec.tables}, **kw)
+
+
+def merge_index(spec: IndexSpec, base, new_rows,
+                check_disjoint: bool = True, **kw):
+    """``base`` with ``new_rows`` folded in: the guard, one delta
+    build, then a union (or the table's fold) per state table."""
+    if check_disjoint:
+        _check_disjoint(spec, base, new_rows, "merge")
+    delta = spec.delta(base, new_rows, **kw)
+    tables = {}
+    for t in spec.tables:
+        d = getattr(delta, t.name)
+        rows = getattr(base, t.name).select(*d.columns).unionByName(d)
+        tables[t.name] = t.fold(rows) if t.fold else rows
+    return base._replace(**tables)
+
+
+def append_index(spec: IndexSpec, spark, path: str, new_rows,
+                 check_disjoint: bool = True, read_kw=None,
+                 **kw) -> None:
+    """Land ``new_rows`` as a journaled delta of the current generation
+    of ``path``.  The guard shares the delta writes' wave; a failure
+    aborts the delta, and the marker lands last."""
+    require_journaled_layout(resolve_index_path(path),
+                             [t.name for t in spec.tables])
+    base = read_index(spec, spark, path, **(read_kw or {}))
+    delta = spec.delta(base, new_rows, **kw)
+    dpath = begin_delta(path)
+    try:
+        _write_state(
+            spec, delta, lambda t: delta_table_path(dpath, t),
+            (lambda: _check_disjoint(spec, base, new_rows, "append"))
+            if check_disjoint else None)
+    except BaseException:
+        abort_delta(dpath)
+        raise
+    commit_delta(dpath)
+
+
+def compact_index(spec: IndexSpec, spark, path: str, **kw) -> None:
+    """Rewrite the current generation, committed deltas folded in, into
+    a fresh one."""
+    write_index(spec, read_index(spec, spark, path, **kw), path,
+                compact=True)
+
+
+__all__ += ["StateTable", "IndexSpec", "write_table", "write_index",
+            "read_index", "merge_index", "append_index",
+            "compact_index"]

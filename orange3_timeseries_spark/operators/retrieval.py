@@ -43,6 +43,7 @@ from typing import NamedTuple, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from orange3_timeseries_spark.operators import index_store as ist
 from orange3_timeseries_spark.operators.text import tokens_expr
 
 __all__ = ["bm25_topk", "rrf_fuse", "Bm25Index", "bm25_build_index",
@@ -367,14 +368,10 @@ class Bm25Index(NamedTuple):
     #: merge and write paths avoid executing a one-row aggregate whose
     #: plan may be a full corpus pass on a freshly built index
     n_buckets: int = 64
-    #: True only when the postings are sentinel-complete BY CONSTRUCTION
-    #: (fresh ``bm25_build_index`` output), i.e. deriving (N, Σdl) from
-    #: the postings is provably identical to the carried ``stats``.
-    #: Indexes READ from disk (or merged from one) carry False, so
-    #: :func:`write_bm25_index` cross-checks derived vs carried stats
-    #: and fails LOUDLY on a legacy pre-sentinel base whose token-less
-    #: docs have no postings row (deriving stats from those postings
-    #: would silently undercount N/Σdl in every subsequent serve)
+    #: True only for fresh ``bm25_build_index`` output, whose postings
+    #: are sentinel-complete BY CONSTRUCTION.  Indexes read from disk
+    #: carry False, so a write cross-checks the stats it derives from
+    #: the postings against the carried ones (:func:`_bm25_write_tables`)
     stats_trusted: bool = True
 
 
@@ -445,77 +442,48 @@ def _pin_budget_ok(df: DataFrame) -> bool:
     return est >= (1 << 60) or est <= budget
 
 
-def write_bm25_index(index: Bm25Index, path: str) -> None:
-    """Persist the index as three parquet state tables in a FRESH
-    generation directory ``path/v=<n>``, then atomically swap the
-    ``path/_CURRENT`` pointer (operators/index_store.py) — so
-    read→merge→write on the SAME logical path is supported (the merged
-    write streams from the old generation into the new one), a crash
-    mid-write leaves the pointer on the last complete generation, and
-    concurrent serves keep reading the old generation until the swap.
-    ``postings`` and ``token_df`` are partitioned by ``bucket`` so a
-    serve-time bucket filter becomes parquet PartitionFilters — the
-    scan never opens the other buckets' files.
+_POSTINGS = ist.StateTable("postings", "bucket")
+_TOKEN_DF = ist.StateTable(
+    "token_df", "bucket",
+    fold=lambda rows: (rows.groupBy("token", "bucket")
+                       .agg(F.sum("df").cast("bigint").alias("df"))
+                       .select("token", "df", "bucket")))
+_STATS = ist.StateTable(
+    "stats",
+    fold=lambda rows: rows.agg(
+        F.sum("n_docs").cast("bigint").alias("n_docs"),
+        F.sum("sum_dl").cast("bigint").alias("sum_dl"),
+        F.max("n_buckets").alias("n_buckets")))
 
-    ONE corpus pass: only the postings materialization executes the
-    corpus tokenize; ``token_df`` and ``stats`` are DERIVED from the
-    materialized postings (df = postings rows per non-sentinel token;
-    N = distinct ids — sentinel rows make that complete; Σdl = per-doc
-    dl summed), which is exact by construction and saves the two extra
-    corpus passes the naive three-table write paid.
 
-    Job structure (r14, guide §2.6/§5.4): when the postings fit the
-    pin budget (``SPARK_GRAFT_WRITE_PIN_BUDGET`` bytes, default 8 GiB,
-    Catalyst size estimate), they are pinned ONCE with a within-query
-    ``localCheckpoint`` and the postings write, the token_df write and
-    the stats derivation run as THREE CONCURRENT jobs over the pin —
-    the serialized write-postings-THEN-derive wave disappears.  Above
-    the budget the r13 sequential shape remains (write postings, then
-    derive from the written parquet): at corpus scale a second full
-    copy of the postings in executor-local storage is the wrong trade
-    for overlapping a bounded job tail."""
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-        run_concurrent,
-        write_small_table,
-    )
-
-    root = path
-    path = begin_version(root)
-    spark = index.postings.sparkSession
-    # appendable tables land under <table>/delta=0 — the journaled
-    # layout read_index_table / *_append_index share (delta is a
-    # leading partition level, so later appends are partition dirs of
-    # the SAME scan, never extra plan nodes)
-    pinned = _pin_budget_ok(index.postings)
-    if pinned:
+def _bm25_write_tables(index: Bm25Index, table_path, guard=None) -> None:
+    """The table wave of BM25's versioned write AND append: only the
+    postings run the corpus tokenize; ``token_df`` and ``stats`` are
+    DERIVED from them (df = rows per non-sentinel token, N = distinct
+    ids, Σdl = per-doc dl summed), exact thanks to the sentinel rows.
+    Within the pin budget (:func:`_pin_budget_ok`) the postings are
+    pinned ONCE and every write, the derivation and the guard run as
+    one concurrent wave; above it the postings are written first and
+    read back.  An index read from disk (``stats_trusted`` False) must
+    derive the stats it carries, else the write fails LOUDLY: a legacy
+    pre-sentinel base would undercount N/Σdl in every later serve."""
+    if _pin_budget_ok(index.postings):
         pr = index.postings.localCheckpoint()
 
         def _write_postings():
-            (pr.repartition("bucket").write.mode("overwrite")
-             .partitionBy("bucket")
-             .parquet(base_table_path(path, "postings")))
+            ist.write_table(pr, _POSTINGS, table_path("postings"))
     else:
-        (index.postings.repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket").parquet(base_table_path(path,
-                                                        "postings")))
-        pr = spark.read.parquet(base_table_path(path, "postings"))
+        ist.write_table(index.postings, _POSTINGS, table_path("postings"))
+        pr = index.postings.sparkSession.read.parquet(
+            table_path("postings"))
         _write_postings = None
 
-    # token_df write, stats derivation, and the optional carried-stats
-    # cross-check are INDEPENDENT jobs over the materialized postings —
-    # run them concurrently (index_store.run_concurrent, guide §2.6) so
-    # one write's task tail back-fills the other's
     def _write_token_df():
-        (pr.where(F.col("token").isNotNull())
-         .groupBy("token", "bucket")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-         .select("token", "df", "bucket")
-         .repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket").parquet(base_table_path(path,
-                                                        "token_df")))
+        ist.write_table(pr.where(F.col("token").isNotNull())
+                        .groupBy("token", "bucket")
+                        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+                        .select("token", "df", "bucket"),
+                        _TOKEN_DF, table_path("token_df"))
 
     def _derive_stats():
         return (pr.groupBy(index.id_col)
@@ -525,95 +493,83 @@ def write_bm25_index(index: Bm25Index, path: str) -> None:
                 .first())
 
     def _carried_stats():
+        # SUM-aggregated: merged/fragmented stats may be multi-row
         return index.stats.agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
             F.sum("sum_dl").cast("bigint").alias("sum_dl")).first()
 
-    # the pinned postings write (when active) joins the same wave —
-    # run_concurrent drops None thunks, so the derivation results are
-    # always the LAST one/two entries regardless of the pin gate
-    res = run_concurrent(
-        _write_postings, _write_token_df, _derive_stats,
-        None if index.stats_trusted else _carried_stats)
-    derived = res[-1] if index.stats_trusted else res[-2]
-    carried = None if index.stats_trusted else res[-1]
-    if not index.stats_trusted:
-        # the derivation assumes postings are sentinel-complete (every
-        # indexed id has >= 1 row).  An index whose base came from a
-        # legacy pre-sentinel write has NO rows for token-less docs —
-        # deriving N/Σdl from it silently undercounts the stats the
-        # in-memory index carried.  Cross-check against the carried
-        # stats (SUM-aggregated: merged/fragmented stats may be
-        # multi-row) and fail LOUDLY on mismatch.
-        if (carried["n_docs"], carried["sum_dl"]) != \
-                (derived["n_docs"], derived["sum_dl"]):
-            raise ValueError(
-                "write_bm25_index: stats derived from postings "
-                f"(n_docs={derived['n_docs']}, sum_dl={derived['sum_dl']}) "
-                "disagree with the stats this index carries "
-                f"(n_docs={carried['n_docs']}, sum_dl={carried['sum_dl']})"
-                " — the postings are not a complete per-doc record "
-                "(legacy pre-sentinel base index, or externally edited "
-                "state). Rebuild the index from the source corpus.")
-    write_small_table(
-        spark, base_table_path(path, "stats"),
+    trusted = index.stats_trusted
+    # run_concurrent drops None thunks: the derivations are always the
+    # last one or two results
+    res = ist.run_concurrent(guard, _write_postings, _write_token_df,
+                             _derive_stats,
+                             None if trusted else _carried_stats)
+    derived = res[-1] if trusted else res[-2]
+    if not trusted and (res[-1]["n_docs"], res[-1]["sum_dl"]) != \
+            (derived["n_docs"], derived["sum_dl"]):
+        raise ValueError(
+            "write_bm25_index: stats derived from postings "
+            f"(n_docs={derived['n_docs']}, sum_dl={derived['sum_dl']}) "
+            "disagree with the stats this index carries "
+            f"(n_docs={res[-1]['n_docs']}, sum_dl={res[-1]['sum_dl']})"
+            " — the postings are not a complete per-doc record "
+            "(legacy pre-sentinel base index, or externally edited "
+            "state). Rebuild the index from the source corpus.")
+    ist.write_small_table(
+        index.postings.sparkSession, table_path("stats"),
         [(derived["n_docs"], derived["sum_dl"], int(index.n_buckets))],
         "n_docs bigint, sum_dl bigint, n_buckets int")
-    # one-row params table so the index reconstructs itself from disk
-    # (the LSH/IVF families' contract): without it a reader had to
-    # rediscover the build-time id column out-of-band
-    write_small_table(spark, os.path.join(path, "params"),
-                      [(index.id_col, int(index.n_buckets))],
-                      "id_col string, n_buckets int")
-    # every table of the generation is on disk — publish it
-    commit_version(root, path)
 
 
-def read_bm25_index(spark: SparkSession, path: str,
-                    id_col: Optional[str] = None) -> Bm25Index:
-    """Load a persisted index; no data is scanned until a serve runs
-    except the one-row params table (recovers the build-time id column
-    and bucket modulus).  ``id_col`` overrides it.  A PRE-PARAMS index
-    (written before the params table existed) falls back to
-    ``'doc_id'`` and recovers ``n_buckets`` from the persisted stats
-    row — ONLY the params-path-missing case falls back; a corrupt or
-    unreadable params table raises (swallowing a real I/O error here
-    would mis-bucket every later merge: ``bm25_merge_index`` trusts the
-    attr, so a wrong modulus silently routes delta postings to buckets
-    the serve-time partition prune never reads).
-
-    ``path`` is the LOGICAL index root: the read resolves the
-    ``_CURRENT`` generation pointer first (operators/index_store.py),
-    falling back to the bare legacy layout when no pointer exists."""
+def _bm25_load(spark, vpath, tables, id_col=None) -> Bm25Index:
     from pyspark.errors import AnalysisException
 
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    # base tables union COMMITTED journaled append deltas
-    # (index_store.read_index_table) — a torn append is invisible
-    stats = read_index_table(spark, path, "stats")
     try:
-        from orange3_timeseries_spark.operators.index_store import (
-            read_small_table_row,
-        )
-        p = read_small_table_row(spark, os.path.join(path, "params"))
+        p = ist.read_small_table_row(spark, os.path.join(vpath, "params"))
         if id_col is None:
             id_col = p["id_col"]
         n_buckets = int(p["n_buckets"])
     except AnalysisException:
-        # missing params table = legacy layout; the stats table (whose
-        # read above already succeeded) carries the true modulus
+        # missing params table = legacy layout; the stats table
+        # carries the true modulus
         if id_col is None:
             id_col = "doc_id"
-        n_buckets = int(stats.select("n_buckets").first()[0])
-    return Bm25Index(
-        read_index_table(spark, path, "postings"),
-        read_index_table(spark, path, "token_df"),
-        stats, id_col, n_buckets, stats_trusted=False)
+        n_buckets = int(tables["stats"].select("n_buckets").first()[0])
+    return Bm25Index(tables["postings"], tables["token_df"],
+                     tables["stats"], id_col, n_buckets,
+                     stats_trusted=False)
+
+
+BM25_SPEC = ist.IndexSpec(
+    "bm25", (_POSTINGS, _TOKEN_DF, _STATS),
+    small_tables=lambda ix: [("params", [(ix.id_col, int(ix.n_buckets))],
+                              "id_col string, n_buckets int")],
+    load=_bm25_load,
+    delta=lambda base, new_docs, text_col="text": bm25_build_index(
+        new_docs, text_col=text_col, id_col=base.id_col,
+        n_buckets=int(base.n_buckets)),
+    guard=("postings", None, "double-count its postings"),
+    write_tables=_bm25_write_tables)
+
+
+def write_bm25_index(index: Bm25Index, path: str) -> None:
+    """Persist the index as the next generation of the logical root
+    ``path`` (operators/index_store.py). ``postings`` and ``token_df``
+    partition by ``bucket``, so a serve's bucket filter becomes parquet
+    PartitionFilters; ``token_df`` and ``stats`` are derived from the
+    postings in one corpus pass (:func:`_bm25_write_tables`)."""
+    ist.write_index(BM25_SPEC, index, path)
+
+
+def read_bm25_index(spark: SparkSession, path: str,
+                    id_col: Optional[str] = None) -> Bm25Index:
+    """Load the current generation of ``path``; only the params row
+    (build-time id column and bucket modulus) is read eagerly, and
+    ``id_col`` overrides it.  A PRE-PARAMS index falls back to
+    ``'doc_id'`` and its stats row's modulus, but only when params is
+    missing: a corrupt table raises, because a wrong modulus would route
+    merged postings to buckets the serve's prune never reads."""
+    return ist.read_index(BM25_SPEC, spark, path, id_col=id_col)
 
 
 def bm25_topk_from_index(index: Bm25Index, queries: DataFrame, *,
@@ -680,200 +636,35 @@ def bm25_topk_from_index(index: Bm25Index, queries: DataFrame, *,
 def bm25_merge_index(base: Bm25Index, new_docs: DataFrame, *,
                      text_col: str = "text",
                      check_disjoint: bool = True) -> Bm25Index:
-    """Merge newly ingested documents into an existing index WITHOUT
-    rebuilding it — the index-maintenance path a 100 TB corpus needs
-    (a daily crawl drop is ~0.1% of the corpus; re-aggregating the
-    other 99.9% per ingest is the cost this avoids).
-
-    Mergeability is exact because every piece of index state is an
-    integer count: the delta postings aggregate over ``new_docs`` only,
-    per-token df merges by BIGINT addition, and the one-row stats add —
-    so a serve from the merged index is hash-identical to a full
-    rebuild over the union (asserted by ``bm25_incremental_topk``'s
-    oracle and tests/test_bm25.py).  Caller contract: ``new_docs`` ids
-    are disjoint from the indexed ones (same contract as any append) —
-    a re-ingested id would double-count its postings, silently
-    inflating that doc's tf/df/stats in every subsequent serve.
-    ``check_disjoint`` (default True) enforces this LOUDLY with a
-    semi-join of the new ids into the base postings (one early-exit
-    scan of the base at merge time — the same fail-loud rule the query
-    registry's duplicate guard follows); pass False only in a pipeline
-    that already proves disjointness, e.g. via
-    ``operators/audit.py:coverage_audit``.
-
-    Scale: the only corpus-sized work is over the DELTA (one explode +
-    tf aggregation) plus the optional disjointness scan; the df merge
-    shuffles at most |vocab| skinny rows and the stats merge is two
-    one-row tables."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(base.postings, new_docs, id_col,
-                           "bm25_merge_index",
-                           "double-count its postings")
-    # the attr is authoritative (build/read both set it) — executing
-    # base.stats here would re-run a corpus-sized aggregate on a
-    # freshly built, not-yet-persisted base
-    n_buckets = int(base.n_buckets)
-    delta = bm25_build_index(new_docs, text_col=text_col,
-                             id_col=id_col, n_buckets=n_buckets)
-    postings = base.postings.select(
-        "token", id_col, "tf", "dl", "bucket").unionByName(
-        delta.postings.select("token", id_col, "tf", "dl", "bucket"))
-    token_df = (base.token_df.select("token", "df", "bucket")
-                .unionByName(delta.token_df
-                             .select("token", "df", "bucket"))
-                .groupBy("token", "bucket")
-                .agg(F.sum("df").cast("bigint").alias("df"))
-                .select("token", "df", "bucket"))
-    stats = (base.stats.select("n_docs", "sum_dl", "n_buckets")
-             .unionByName(delta.stats
-                          .select("n_docs", "sum_dl", "n_buckets"))
-             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"),
-                  F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-                  F.max("n_buckets").alias("n_buckets")))
-    # the delta is sentinel-complete by construction; trust follows the
-    # base (a read-from-disk base keeps the write-time cross-check on)
-    return Bm25Index(postings, token_df, stats, id_col, n_buckets,
-                     stats_trusted=base.stats_trusted)
+    """Merge newly ingested documents WITHOUT a rebuild: delta postings
+    over ``new_docs`` only, df and stats added as BIGINTs, so serves are
+    hash-identical to a rebuild over the union.  ``check_disjoint``
+    (default True) rejects an already indexed id LOUDLY (it would
+    double-count its postings); pass False only when a pipeline proves
+    disjointness upstream (e.g.  ``operators/audit.py:coverage_audit``)."""
+    return ist.merge_index(BM25_SPEC, base, new_docs, check_disjoint,
+                           text_col=text_col)
 
 
 def bm25_append_index(spark: SparkSession, path: str,
                       new_docs: DataFrame, *, text_col: str = "text",
                       check_disjoint: bool = True) -> None:
-    """FAST-INGEST append: fold a delta batch into the CURRENT
-    generation of a persisted index as a JOURNALED DELTA — the delta's
-    postings / per-token df rows / one stats row land as
-    ``delta=<k>`` partition directories INSIDE each state table and
-    publish atomically with a per-delta ``_COMMITTED`` marker in the
-    sibling metadata dir (index_store.begin_delta/commit_delta/
-    delta_table_path), so ingest COMPUTE and WRITE IO are proportional to
-    the batch, never the corpus (``bm25_merge_index`` +
-    ``write_bm25_index`` computes the same delta but re-WRITES the
-    full corpus state into a new generation — IO-bound at 100 TB even
-    though its compute is delta-only).  The default-on disjoint guard
-    is the one corpus-sized read: an id semi-join against the base
-    postings (no partition prune applies — postings bucket by token
-    hash, not id).  A pipeline that proves disjointness upstream
-    (monotonic crawl ids, ``operators/audit.py:coverage_audit``)
-    passes ``check_disjoint=False`` to make the whole ingest
-    delta-proportional; same rule as the merge path.
-
-    Serve-exactness: readers union the base tables with COMMITTED
-    deltas (``read_bm25_index`` via index_store.read_index_table) and
-    the serve path SUM-aggregates df and stats after its query-token
-    prune (``bm25_topk_from_index``), so appended delta rows score
-    bit-identically to a rebuilt index; asserted by
-    ``tests/test_index_lifecycle.py`` and the ``bm25_lifecycle_topk``
-    driver oracle.
-
-    Crash/concurrency contract: a failure mid-append leaves an
-    UNMARKED delta no reader ever sees — the pre-append state keeps
-    serving (tests/test_index_lifecycle.py torn-append test), and a
-    concurrent reader planning mid-append sees the whole batch or none
-    of it (the marker is the last file written).  Because ``delta`` is
-    a leading PARTITION level of each table, the serve keeps ONE scan
-    node regardless of ingest count (committed-set filtering is a
-    parquet PartitionFilter, never a plan-node union).  The remaining
-    trade-off vs the versioned write is **file fragmentation** (~1
-    file per touched bucket per append inside the same scan);
-    ``compact_bm25_index`` folds the deltas into a fresh canonical
-    generation (hash-identical serves) and resets the count."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-        run_concurrent,
-        write_small_table,
-    )
-
-    # fail BEFORE allocating the delta dir on a pre-journal generation
-    require_journaled_layout(resolve_index_path(path),
-                             ("postings", "token_df", "stats"))
-    base = read_bm25_index(spark, path)
-    delta = bm25_build_index(new_docs, text_col=text_col,
-                             id_col=base.id_col,
-                             n_buckets=base.n_buckets)
-    # pin the delta postings so the three table writes share ONE
-    # tokenize pass (same reason write_bm25_index derives token_df and
-    # stats from the WRITTEN postings): without the pin each .write
-    # re-executes the explode+tf aggregation over the batch
-    dp = delta.postings.localCheckpoint()
-    dpath = begin_delta(path)
-    bucket = F.pmod(F.xxhash64(F.col("token")),
-                    F.lit(base.n_buckets)).cast("int")
-
-    # the three delta-table writes all read the PINNED postings and are
-    # independent of each other — overlap them (guide §2.6); the commit
-    # marker still lands strictly after all three complete
-    def _w_postings():
-        (dp.repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket")
-         .parquet(delta_table_path(dpath, "postings")))
-
-    def _w_token_df():
-        (dp.where(F.col("token").isNotNull())
-         .groupBy("token")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-         .select("token", "df", bucket.alias("bucket"))
-         .repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket")
-         .parquet(delta_table_path(dpath, "token_df")))
-
-    def _w_stats():
-        # stats derived from the pinned postings — sentinel rows make
-        # them a complete per-doc record, exactly the write path's
-        # derivation; the one-row result lands driver-side
-        st = (dp.groupBy(base.id_col).agg(F.max("dl").alias("__dl__"))
-              .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                   F.sum("__dl__").cast("bigint").alias("sum_dl"))
-              .first())
-        write_small_table(
-            spark, delta_table_path(dpath, "stats"),
-            [(st["n_docs"], st["sum_dl"], int(base.n_buckets))],
-            "n_docs bigint, sum_dl bigint, n_buckets int")
-
-    # the disjointness gate is one more independent job — overlap it
-    # with the three writes (guide §2.6); commit is still gated on the
-    # check, a failure aborts the (invisible) delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.postings, new_docs, base.id_col,
-                "bm25_append_index",
-                "double-count its postings")) if check_disjoint
-            else None,
-            _w_postings, _w_token_df, _w_stats)
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    # marker LAST — the atomic commit point for the whole batch
-    commit_delta(dpath)
+    """FAST-INGEST append: the batch's postings, df rows and one stats
+    row land as a JOURNALED DELTA of the current generation, IO
+    proportional to the batch and invisible until its marker lands.
+    Serves SUM-aggregate df and stats, so appended rows score
+    bit-identically to a rebuild; each append adds ~1 file per touched
+    bucket until :func:`compact_bm25_index`. The disjoint guard is the
+    one corpus-sized read."""
+    ist.append_index(BM25_SPEC, spark, path, new_docs, check_disjoint,
+                     text_col=text_col)
 
 
 def compact_bm25_index(spark: SparkSession, path: str) -> None:
-    """Rewrite the current generation into a fresh one and swap the
-    pointer: after K ``bm25_append_index`` ingests the serve scan
-    lists K journaled delta partitions (~1 file per touched bucket
-    each, plus a stats row apiece) — the rewrite folds them into canonical
-    single-generation state (token_df and stats re-derived from the
-    postings, exactly like any versioned write) and resets the
-    per-bucket file count to ~1.  Serves are hash-identical
-    before/after (the write-time stats cross-check verifies the
-    derived counts against the carried ones, and
-    tests/test_index_lifecycle.py asserts result equality)."""
-    write_bm25_index(read_bm25_index(spark, path), path)
+    """Fold the journaled deltas into a fresh canonical generation (~1
+    file per bucket, token_df and stats re-derived and cross-checked);
+    serves stay hash-identical."""
+    ist.compact_index(BM25_SPEC, spark, path)
 
 
 __all__ += ["bm25_merge_index", "bm25_append_index",

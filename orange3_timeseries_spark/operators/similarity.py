@@ -13,11 +13,13 @@ functions (JVM-side, no UDFs).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+import os
+from typing import NamedTuple, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from orange3_timeseries_spark.operators import index_store as ist
 from orange3_timeseries_spark.operators.hashing import phash
 from orange3_timeseries_spark.operators.localrel import local_df
 from orange3_timeseries_spark.operators.partitioning import (
@@ -1058,7 +1060,7 @@ def semantic_dedup_flags(corpus: DataFrame, vec_col: str = "embedding",
                       "is_kept")
 
 
-class IvfIndex:
+class IvfIndex(NamedTuple):
     """A persisted-or-persistable IVF index under the same build-once/
     serve-refit-free contract as the BM25 and forecaster registries
     (``models/registry.py``): two plain parquet state tables, no
@@ -1077,16 +1079,14 @@ class IvfIndex:
     bit-identical to live :func:`ivf_topk` with the same centroids —
     both route through :func:`_ivf_probe_score_topk`."""
 
-    def __init__(self, centroids: DataFrame, lists: DataFrame,
-                 id_col: str = "vec_id", two_level: bool = False):
-        self.centroids = centroids
-        self.lists = lists
-        self.id_col = id_col
-        # the assignment rule the lists were built with — persisted
-        # (write_ivf_index params table) so an incremental merge can
-        # never silently assign its delta under a DIFFERENT rule than
-        # the base lists (flat vs two-level differ on boundary vectors)
-        self.two_level = two_level
+    centroids: DataFrame
+    lists: DataFrame
+    id_col: str = "vec_id"
+    #: the assignment rule the lists were built with — persisted
+    #: (write_ivf_index params table) so an incremental merge can
+    #: never silently assign its delta under a DIFFERENT rule than
+    #: the base lists (flat vs two-level differ on boundary vectors)
+    two_level: bool = False
 
 
 def ivf_build_index(corpus: DataFrame, vec_col: str = "embedding",
@@ -1115,49 +1115,65 @@ def ivf_build_index(corpus: DataFrame, vec_col: str = "embedding",
     return IvfIndex(cent_df, lists, id_col, two_level=two_level_assign)
 
 
+def _centroids_table(index):
+    # O(k·d) and usually a LocalRelation: written driver-side, not by a
+    # Spark job (guide §5.3)
+    rows = index.centroids.select("centroid_id", "centroid").collect()
+    return ("centroids",
+            [(int(r["centroid_id"]), [float(x) for x in r["centroid"]])
+             for r in rows], "centroid_id int, centroid array<double>")
+
+
+def _frozen_centroids(index):
+    return [[float(x) for x in r["centroid"]]
+            for r in index.centroids.orderBy("centroid_id").collect()]
+
+
+def _ivf_load(spark, vpath, tables, id_col="vec_id") -> IvfIndex:
+    try:
+        two_level = bool(ist.read_small_table_row(
+            spark, os.path.join(vpath, "params"))["two_level"])
+    except Exception as exc:
+        raise ValueError(
+            f"read_ivf_index: no readable params table under {vpath!r} "
+            "— cannot recover the assignment rule this index was "
+            "built with (flat vs two-level assign differ on boundary "
+            "vectors, so a merge under a guessed rule would silently "
+            "desynchronize from the lists). Rebuild the index with "
+            "the current write_ivf_index, or write the one-row params "
+            "parquet yourself if the rule is known.") from exc
+    return IvfIndex(_centroids_df_from_disk(spark, vpath), tables["lists"],
+                    id_col, two_level=two_level)
+
+
+def _ivf_delta(base: IvfIndex, new_vectors: DataFrame,
+               vec_col: str = "embedding") -> IvfIndex:
+    # assigned under the base's persisted rule: a flat/two-level
+    # mismatch would put boundary vectors in other cells than a rebuild
+    lists = _assign_centroid(
+        new_vectors.select(F.col(base.id_col).alias("nn_id"),
+                           _as_double(F.col(vec_col)).alias("cvec")),
+        "cvec", _frozen_centroids(base), two_level=base.two_level
+    ).select("centroid_id", "nn_id", "cvec")
+    return base._replace(lists=lists)
+
+
+IVF_SPEC = ist.IndexSpec(
+    "ivf", (ist.StateTable("lists", "centroid_id"),),
+    small_tables=lambda ix: [_centroids_table(ix),
+                             ("params", [(bool(ix.two_level),)],
+                              "two_level boolean")],
+    load=_ivf_load, delta=_ivf_delta,
+    guard=("lists", "nn_id", "duplicate its list entry"))
+
+
 def write_ivf_index(index: IvfIndex, path: str) -> None:
-    """Persist the index into a FRESH generation directory
-    ``path/v=<n>`` and atomically swap the ``path/_CURRENT`` pointer
-    (operators/index_store.py) — read→merge→write on the same logical
-    path is supported, and a crash mid-write leaves readers on the
-    last complete generation.  Inverted lists partitioned by
-    ``centroid_id`` so serve-time probe filters become parquet
-    PartitionFilters; a one-row params table records the assignment
-    rule so merges after a read cannot desynchronize from it."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-    )
-
-    from orange3_timeseries_spark.operators.index_store import (
-        write_small_table,
-    )
-
-    root = path
-    path = begin_version(root)
-    spark = index.lists.sparkSession
-    # centroids are O(k·d) by contract (collected/broadcast at serve
-    # time) and usually already a LocalRelation — persist them
-    # driver-side like params/codebooks instead of scheduling a Spark
-    # job for ~16 rows (guide §5.3); lists are appendable: base data
-    # under lists/delta=0 (the journaled layout — appends become
-    # partition dirs of ONE scan)
-    cent_rows = index.centroids.select("centroid_id",
-                                       "centroid").collect()
-    (index.lists.repartition("centroid_id")
-     .write.mode("overwrite").partitionBy("centroid_id")
-     .parquet(base_table_path(path, "lists")))
-    write_small_table(spark, os.path.join(path, "centroids"),
-                      [(int(r["centroid_id"]),
-                        [float(x) for x in r["centroid"]])
-                       for r in cent_rows],
-                      "centroid_id int, centroid array<double>")
-    write_small_table(spark, os.path.join(path, "params"),
-                      [(bool(index.two_level),)], "two_level boolean")
-    commit_version(root, path)
+    """Persist the index as the next generation of ``path``: lists
+    partitioned by ``centroid_id`` (probe filters become
+    PartitionFilters), plus the centroids and a params row recording the
+    flat/two-level assignment rule, so merges after a read cannot
+    desynchronize from it."""
+    ist.write_index(IVF_SPEC, index, path)
 
 
 def _centroids_df_from_disk(spark, vpath: str):
@@ -1188,46 +1204,11 @@ def _centroids_df_from_disk(spark, vpath: str):
 
 
 def read_ivf_index(spark, path: str, id_col: str = "vec_id") -> IvfIndex:
-    """Load a persisted IVF index; only the one-row params table is
-    read eagerly.  An index WITHOUT a params table is rejected LOUDLY:
-    the assignment rule (flat vs two-level) is unknowable from the
-    lists alone, and guessing wrong reproduces exactly the silent
-    merge desync the params table exists to prevent — rebuild the
-    index (or write the missing params table if the rule is known).
-
-    ``path`` is the LOGICAL index root: the ``_CURRENT`` generation
-    pointer resolves first (operators/index_store.py), falling back to
-    the bare legacy layout when no pointer exists."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    from orange3_timeseries_spark.operators.index_store import (
-        read_small_table_row,
-    )
-    try:
-        two_level = bool(
-            read_small_table_row(spark, os.path.join(path, "params"))
-            ["two_level"])
-    except Exception as exc:
-        raise ValueError(
-            f"read_ivf_index: no readable params table under {path!r} "
-            "— cannot recover the assignment rule this index was "
-            "built with (flat vs two-level assign differ on boundary "
-            "vectors, so a merge under a guessed rule would silently "
-            "desynchronize from the lists). Rebuild the index with "
-            "the current write_ivf_index, or write the one-row params "
-            "parquet yourself if the rule is known.") from exc
-    return IvfIndex(
-        _centroids_df_from_disk(spark, path),
-        # lists union COMMITTED journaled append deltas — a torn
-        # append is invisible (index_store.read_index_table)
-        read_index_table(spark, path, "lists"), id_col,
-        two_level=two_level)
+    """Load the current generation of ``path``; only params and the
+    O(k·d) centroids are read eagerly.  An index WITHOUT params is
+    rejected LOUDLY: the assignment rule is unknowable from the lists,
+    and a guessed one silently desynchronizes merges."""
+    return ist.read_index(IVF_SPEC, spark, path, id_col=id_col)
 
 
 def ivf_topk_from_index(index: IvfIndex, queries: DataFrame,
@@ -1740,7 +1721,7 @@ def _jl_project_gemm(df: DataFrame, vec_col: str, id_cols: list,
 
 
 
-class PqIndex:
+class PqIndex(NamedTuple):
     """A persisted-or-persistable product-quantization index under the
     same build-once/serve-refit-free contract as :class:`IvfIndex`:
     two plain parquet state tables, no pickle.
@@ -1759,11 +1740,9 @@ class PqIndex:
     bit-identical to live :func:`pq_topk` with the same codebooks —
     both route through :func:`_pq_adc_topk`."""
 
-    def __init__(self, codes: DataFrame, codebooks,
-                 id_col: str = "vec_id"):
-        self.codes = codes
-        self.codebooks = codebooks
-        self.id_col = id_col
+    codes: DataFrame
+    codebooks: list
+    id_col: str = "vec_id"
 
 
 def pq_build_index(corpus: DataFrame, codebooks=None,
@@ -1782,36 +1761,36 @@ def pq_build_index(corpus: DataFrame, codebooks=None,
     return PqIndex(codes, codebooks, id_col)
 
 
+def _codebooks_table(codebooks):
+    return ("codebooks",
+            [(int(m), int(j), [float(x) for x in c])
+             for m, cb in enumerate(codebooks) for j, c in enumerate(cb)],
+            "m int, j int, centroid array<double>")
+
+
+def _pq_load(spark, vpath, tables, id_col="vec_id") -> PqIndex:
+    rows = ist.read_small_table_rows(spark,
+                                     os.path.join(vpath, "codebooks"))
+    return PqIndex(tables["codes"],
+                   _codebooks_from_rows(rows, vpath, "read_pq_index"),
+                   id_col)
+
+
+PQ_SPEC = ist.IndexSpec(
+    "pq", (ist.StateTable("codes"),),
+    small_tables=lambda ix: [_codebooks_table(ix.codebooks)],
+    load=_pq_load,
+    delta=lambda base, new_vectors, vec_col="embedding": base._replace(
+        codes=pq_encode(
+            new_vectors.select(F.col(base.id_col).alias("nn_id"), vec_col),
+            base.codebooks, vec_col=vec_col, id_col="nn_id")),
+    guard=("codes", "nn_id", "duplicate its code row"))
+
+
 def write_pq_index(index: PqIndex, path: str) -> None:
-    """Persist the index into a FRESH generation directory
-    ``path/v=<n>`` and atomically swap the ``path/_CURRENT`` pointer
-    (operators/index_store.py) — read→merge→write on the same logical
-    path is supported, and a crash mid-write leaves readers on the
-    last complete generation.  Codes as skinny parquet, the codebooks
-    exploded to (m, j, centroid) rows."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-    )
-
-    root = path
-    path = begin_version(root)
-    # codes are appendable: base data under codes/delta=0
-    index.codes.write.mode("overwrite").parquet(
-        base_table_path(path, "codes"))
-    spark = index.codes.sparkSession
-    rows = [(int(m), int(j), [float(x) for x in c])
-            for m, cb in enumerate(index.codebooks)
-            for j, c in enumerate(cb)]
-    from orange3_timeseries_spark.operators.index_store import (
-        write_small_table,
-    )
-    write_small_table(spark, os.path.join(path, "codebooks"), rows,
-                      "m int, j int, centroid array<double>")
-    commit_version(root, path)
+    """Persist the index as the next generation of ``path``: codes as
+    skinny parquet, the codebooks as (m, j, centroid) rows."""
+    ist.write_index(PQ_SPEC, index, path)
 
 
 def _codebooks_from_rows(rows, path, who):
@@ -1853,31 +1832,10 @@ def _codebooks_from_rows(rows, path, who):
 
 
 def read_pq_index(spark, path: str, id_col: str = "vec_id") -> PqIndex:
-    """Load a persisted PQ index.  Only the O(M·K) codebook table is
-    collected eagerly (the serve-time LUTs need it driver-side, the
-    same bounded footprint the live path carries); codes stay lazy.
-    ``path`` is the logical root — the ``_CURRENT`` generation pointer
-    resolves first (operators/index_store.py), bare layout fallback."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        resolve_index_path,
-    )
-
-    path = resolve_index_path(path)
-    from orange3_timeseries_spark.operators.index_store import (
-        read_small_table_rows,
-    )
-    rows = read_small_table_rows(spark, os.path.join(path, "codebooks"))
-    codebooks = _codebooks_from_rows(rows, path, "read_pq_index")
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-    )
-
-    # codes union COMMITTED journaled append deltas — a torn append
-    # is invisible (index_store.read_index_table)
-    return PqIndex(read_index_table(spark, path, "codes"),
-                   codebooks, id_col)
+    """Load the current generation of ``path``; only the O(M·K)
+    codebooks are read eagerly (validated by
+    :func:`_codebooks_from_rows`), codes stay lazy."""
+    return ist.read_index(PQ_SPEC, spark, path, id_col=id_col)
 
 
 def pq_topk_from_index(index: PqIndex, queries: DataFrame, k: int = 5,
@@ -1894,193 +1852,53 @@ def pq_topk_from_index(index: PqIndex, queries: DataFrame, k: int = 5,
 def ivf_merge_index(base: IvfIndex, new_vectors: DataFrame,
                     vec_col: str = "embedding", *,
                     check_disjoint: bool = True) -> IvfIndex:
-    """Fold newly ingested vectors INTO an IVF index without
-    re-assigning the existing lists: assignment depends only on the
-    (frozen) centroids, so the merge is exactly one delta assignment
-    pass + append — merged state == rebuilt state row-for-row, and a
-    serve from the merged index is bit-identical to a rebuild over the
-    union.  The delta is assigned under the SAME rule the base lists
-    were built with (``base.two_level``, persisted through
-    write/read — a flag mismatch would silently put boundary vectors
-    in different cells than a rebuild).  Caller contract:
-    ``new_vectors`` ids are disjoint from the indexed ones
-    (``check_disjoint`` enforces it LOUDLY, same rule as
-    ``bm25_merge_index`` / ``lsh_merge_index``).  Note the centroids
-    are NOT retrained — the standard serving trade-off; retrain +
-    rebuild when drift accumulates."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.lists.select(F.col("nn_id").alias(id_col)),
-            new_vectors, id_col, "ivf_merge_index",
-            "duplicate its list entry")
-    cent_rows = base.centroids.orderBy("centroid_id").collect()
-    centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    delta = _assign_centroid(
-        new_vectors.select(F.col(id_col).alias("nn_id"),
-                           _as_double(F.col(vec_col)).alias("cvec")),
-        "cvec", centroids, two_level=base.two_level
-    ).select("centroid_id", "nn_id", "cvec")
-    return IvfIndex(base.centroids,
-                    base.lists.select("centroid_id", "nn_id", "cvec")
-                    .unionByName(delta), id_col,
-                    two_level=base.two_level)
+    """Fold new vectors INTO an IVF index: assignment depends only on
+    the frozen centroids and the persisted rule, so one delta assignment
+    pass plus a union serves bit-identically to a rebuild.  Loud
+    disjoint-ids guard; centroids are NOT retrained
+    (:func:`ivf_drift_stats` says when to)."""
+    return ist.merge_index(IVF_SPEC, base, new_vectors, check_disjoint,
+                           vec_col=vec_col)
 
 
 def pq_merge_index(base: PqIndex, new_vectors: DataFrame,
                    vec_col: str = "embedding", *,
                    check_disjoint: bool = True) -> PqIndex:
-    """Fold newly ingested vectors INTO a PQ index without re-encoding
-    the corpus: codes depend only on the (frozen) codebooks, so the
-    merge is one delta encode pass + append — merged state == rebuilt
-    state row-for-row.  Same disjoint-ids contract and loud guard as
-    the other index families; codebooks are NOT retrained."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.codes.select(F.col("nn_id").alias(id_col)),
-            new_vectors, id_col, "pq_merge_index",
-            "duplicate its code row")
-    delta = pq_encode(
-        new_vectors.select(F.col(id_col).alias("nn_id"), vec_col),
-        base.codebooks, vec_col=vec_col, id_col="nn_id")
-    return PqIndex(base.codes.select("nn_id", "pq_code")
-                   .unionByName(delta.select("nn_id", "pq_code")),
-                   base.codebooks, id_col)
+    """Fold new vectors INTO a PQ index: codes depend only on the frozen
+    codebooks, so one delta encode pass plus a union equals a rebuild
+    row for row.  Loud disjoint-ids guard; codebooks are NOT retrained."""
+    return ist.merge_index(PQ_SPEC, base, new_vectors, check_disjoint,
+                           vec_col=vec_col)
 
 
 def ivf_append_index(spark, path: str, new_vectors: DataFrame,
                      vec_col: str = "embedding",
                      id_col: str = "vec_id", *,
                      check_disjoint: bool = True) -> None:
-    """FAST-INGEST append for a persisted IVF index: assign the delta
-    under the persisted rule (frozen centroids + the params table's
-    flat/two-level flag) and land its list rows as a JOURNALED DELTA
-    (``lists/delta=<k>`` partition dirs + per-delta ``_COMMITTED``
-    marker, index_store.begin_delta/commit_delta/delta_table_path) —
-    ingest IO proportional to
-    the batch, never the corpus (``write_ivf_index`` after a merge
-    rewrites every list), and crash-atomic: an unmarked delta is
-    invisible, the pre-append state keeps serving.  Serve-exactness is
-    structural: lists are pure per-id appends and readers union
-    committed deltas, so an appended index serves row-identically to a
-    rebuild.  Fragmentation (~1 delta dir per ingest) accumulates
-    until ``compact_ivf_index`` resets it."""
-    import os
-
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path), ("lists",))
-    base = read_ivf_index(spark, path, id_col)
-    cent_rows = base.centroids.orderBy("centroid_id").collect()
-    centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    delta = _assign_centroid(
-        new_vectors.select(F.col(id_col).alias("nn_id"),
-                           _as_double(F.col(vec_col)).alias("cvec")),
-        "cvec", centroids, two_level=base.two_level
-    ).select("centroid_id", "nn_id", "cvec")
-    dpath = begin_delta(path)
-    # the disjointness gate and the delta write are independent Spark
-    # jobs — overlap them (guide §2.6); the COMMIT marker still lands
-    # strictly after the check passes, and a failed check aborts the
-    # (invisible) delta, so the serving state is untouched either way
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.lists.select(F.col("nn_id").alias(id_col)),
-                new_vectors, id_col, "ivf_append_index",
-                "duplicate its list entry")) if check_disjoint else None,
-            lambda: (delta.repartition("centroid_id")
-                     .write.mode("overwrite").partitionBy("centroid_id")
-                     .parquet(delta_table_path(dpath, "lists"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    """FAST-INGEST append: assign the batch under the persisted model
+    and rule and land its list rows as a JOURNALED DELTA —
+    batch-proportional IO, invisible until its marker lands, serves
+    row-identical to a rebuild.  Fragments until
+    :func:`compact_ivf_index`."""
+    ist.append_index(IVF_SPEC, spark, path, new_vectors, check_disjoint,
+                     {"id_col": id_col}, vec_col=vec_col)
 
 
 def compact_ivf_index(spark, path: str, id_col: str = "vec_id") -> None:
-    """Rewrite the current IVF generation into a fresh one and swap the
-    pointer: the versioned write's ``repartition('centroid_id')``
-    collapses the per-ingest delta files back to ~1 per centroid
-    partition; centroids/params are tiny and rewrite as-is.  Serves are
-    row-identical before/after."""
-    write_ivf_index(read_ivf_index(spark, path, id_col), path)
+    """Rewrite the current generation into a fresh one (~1 file per
+    centroid partition again); serves are row-identical before/after."""
+    ist.compact_index(IVF_SPEC, spark, path, id_col=id_col)
 
 
 def pq_append_index(spark, path: str, new_vectors: DataFrame,
                     vec_col: str = "embedding",
                     id_col: str = "vec_id", *,
                     check_disjoint: bool = True) -> None:
-    """FAST-INGEST append for a persisted PQ index: Arrow-encode the
-    delta against the persisted (frozen) codebooks and land its code
-    rows as a JOURNALED DELTA (``codes/delta=<k>`` partition dirs +
-    per-delta ``_COMMITTED`` marker) — ingest IO proportional to the
-    batch, and
-    crash-atomic: an unmarked delta is invisible, the pre-append state
-    keeps serving.  Codes are pure per-id rows and readers union
-    committed deltas, so an appended index serves row-identically to a
-    rebuild.  One delta dir per ingest accumulates until
-    ``compact_pq_index`` resets it."""
-    import os
-
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path), ("codes",))
-    base = read_pq_index(spark, path, id_col)
-    delta = pq_encode(
-        new_vectors.select(F.col(id_col).alias("nn_id"), vec_col),
-        base.codebooks, vec_col=vec_col, id_col="nn_id")
-    dpath = begin_delta(path)
-    # disjointness gate and delta write overlap (guide §2.6); commit
-    # is still gated on the check, failure aborts the invisible delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.codes.select(F.col("nn_id").alias(id_col)),
-                new_vectors, id_col, "pq_append_index",
-                "duplicate its code row")) if check_disjoint else None,
-            lambda: (delta.select("nn_id", "pq_code")
-                     .write.mode("overwrite")
-                     .parquet(delta_table_path(dpath, "codes"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    """FAST-INGEST append: encode the batch against the persisted
+    codebooks and land its codes as a JOURNALED DELTA, same contract as
+    :func:`ivf_append_index`; fragments until :func:`compact_pq_index`."""
+    ist.append_index(PQ_SPEC, spark, path, new_vectors, check_disjoint,
+                     {"id_col": id_col}, vec_col=vec_col)
 
 
 def ivf_drift_stats(index: IvfIndex, new_vectors: DataFrame,
@@ -2420,23 +2238,14 @@ def pq_drift_by_subspace(index: PqIndex, new_vectors: DataFrame,
 
 
 def compact_pq_index(spark, path: str, id_col: str = "vec_id") -> None:
-    """Rewrite the current PQ generation into a fresh one and swap the
-    pointer, coalescing the per-ingest delta files: codes are
-    repartitioned to a byte-proportional width
-    (operators/partitioning.scaled_width — codes are 8 ints per vector,
-    so even a billion-vector table compacts to modest file counts).
-    Serves are row-identical before/after."""
-    from orange3_timeseries_spark.operators.partitioning import (
-        scaled_width,
-    )
-
-    idx = read_pq_index(spark, path, id_col)
-    codes = idx.codes.repartition(scaled_width(idx.codes))
-    write_pq_index(PqIndex(codes, idx.codebooks, idx.id_col), path)
+    """Rewrite the current generation into a fresh one, the
+    unpartitioned codes re-widened to a byte-proportional task count
+    (partitioning.scaled_width); serves are row-identical before/after."""
+    ist.compact_index(PQ_SPEC, spark, path, id_col=id_col)
 
 
 # ------------------------------------------------- persisted IVF-PQ index
-class IvfPqIndex:
+class IvfPqIndex(NamedTuple):
     """The persisted COMPOSITE index — coarse inverted lists bounding
     the scan + PQ codes bounding the memory traffic (the FAISS-IVFPQ
     production layout for billion-vector serving) — under the same
@@ -2457,12 +2266,10 @@ class IvfPqIndex:
     expressions as the live :func:`ivfpq_topk` — a serve from the
     loaded index is bit-identical to the live path."""
 
-    def __init__(self, centroids: DataFrame, codebooks,
-                 entries: DataFrame, id_col: str = "vec_id"):
-        self.centroids = centroids
-        self.codebooks = codebooks
-        self.entries = entries
-        self.id_col = id_col
+    centroids: DataFrame
+    codebooks: list
+    entries: DataFrame
+    id_col: str = "vec_id"
 
 
 def ivfpq_build_index(corpus: DataFrame, centroids, codebooks,
@@ -2485,78 +2292,49 @@ def ivfpq_build_index(corpus: DataFrame, centroids, codebooks,
     return IvfPqIndex(cent_df, codebooks, entries, id_col)
 
 
+def _ivfpq_load(spark, vpath, tables, id_col=None) -> IvfPqIndex:
+    rows = ist.read_small_table_rows(spark,
+                                     os.path.join(vpath, "codebooks"))
+    codebooks = _codebooks_from_rows(rows, vpath, "read_ivfpq_index")
+    if id_col is None:
+        id_col = ist.read_small_table_row(
+            spark, os.path.join(vpath, "params"))["id_col"]
+    return IvfPqIndex(_centroids_df_from_disk(spark, vpath), codebooks,
+                      tables["entries"], id_col)
+
+
+def _ivfpq_delta(base: IvfPqIndex, new_vectors: DataFrame,
+                 vec_col: str = "embedding") -> IvfPqIndex:
+    # one Arrow pass assigns AND encodes the batch under frozen models
+    entries = ivfpq_index(
+        new_vectors.select(F.col(base.id_col).alias("nn_id"), vec_col),
+        _frozen_centroids(base), base.codebooks, vec_col=vec_col,
+        id_col="nn_id").select("centroid_id", "nn_id", "pq_code")
+    return base._replace(entries=entries)
+
+
+IVFPQ_SPEC = ist.IndexSpec(
+    "ivfpq", (ist.StateTable("entries", "centroid_id"),),
+    small_tables=lambda ix: [_centroids_table(ix),
+                             _codebooks_table(ix.codebooks),
+                             ("params", [(ix.id_col,)], "id_col string")],
+    load=_ivfpq_load, delta=_ivfpq_delta,
+    guard=("entries", "nn_id", "duplicate its entry"))
+
+
 def write_ivfpq_index(index: IvfPqIndex, path: str) -> None:
-    """Persist into a fresh generation + atomic pointer swap
-    (operators/index_store.py), entries partitioned by
-    ``centroid_id`` (probe filters become parquet PartitionFilters)
-    under the journaled layout (``entries/delta=0``) so fast-ingest
-    appends stay one-scan partition dirs."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        base_table_path,
-        begin_version,
-        commit_version,
-    )
-
-    from orange3_timeseries_spark.operators.index_store import (
-        write_small_table,
-    )
-
-    root = path
-    path = begin_version(root)
-    # centroids are O(k·d) by contract — persist them driver-side like
-    # codebooks/params instead of scheduling a Spark job for ~16 rows
-    # (guide §5.3); entries stay the one distributed write
-    cent_rows = index.centroids.select("centroid_id",
-                                       "centroid").collect()
-    (index.entries.repartition("centroid_id")
-     .write.mode("overwrite").partitionBy("centroid_id")
-     .parquet(base_table_path(path, "entries")))
-    spark = index.entries.sparkSession
-    write_small_table(spark, os.path.join(path, "centroids"),
-                      [(int(r["centroid_id"]),
-                        [float(x) for x in r["centroid"]])
-                       for r in cent_rows],
-                      "centroid_id int, centroid array<double>")
-    rows = [(int(m), int(j), [float(x) for x in c])
-            for m, cb in enumerate(index.codebooks)
-            for j, c in enumerate(cb)]
-    write_small_table(spark, os.path.join(path, "codebooks"), rows,
-                      "m int, j int, centroid array<double>")
-    write_small_table(spark, os.path.join(path, "params"),
-                      [(index.id_col,)], "id_col string")
-    commit_version(root, path)
+    """Persist the index as the next generation of ``path``: entries
+    partitioned by ``centroid_id``, plus centroids, codebooks and the id
+    column."""
+    ist.write_index(IVFPQ_SPEC, index, path)
 
 
 def read_ivfpq_index(spark, path: str,
                      id_col: str = None) -> IvfPqIndex:
-    """Load a persisted IVF-PQ index; only the O(k·d)+O(M·K·ds) model
-    tables are touched eagerly.  Entries union COMMITTED journaled
-    append deltas (index_store.read_index_table) — a torn append is
-    invisible."""
-    import os
-
-    from orange3_timeseries_spark.operators.index_store import (
-        read_index_table,
-        resolve_index_path,
-    )
-
-    from orange3_timeseries_spark.operators.index_store import (
-        read_small_table_row,
-        read_small_table_rows,
-    )
-
-    vpath = resolve_index_path(path)
-    rows = read_small_table_rows(spark,
-                                 os.path.join(vpath, "codebooks"))
-    codebooks = _codebooks_from_rows(rows, vpath, "read_ivfpq_index")
-    if id_col is None:
-        id_col = read_small_table_row(
-            spark, os.path.join(vpath, "params"))["id_col"]
-    return IvfPqIndex(
-        _centroids_df_from_disk(spark, vpath),
-        codebooks, read_index_table(spark, vpath, "entries"), id_col)
+    """Load the current generation of ``path``; only the O(k·d) +
+    O(M·K·ds) model tables are read eagerly, and the id column comes
+    from params unless ``id_col`` is given."""
+    return ist.read_index(IVFPQ_SPEC, spark, path, id_col=id_col)
 
 
 def ivfpq_topk_from_index(index: IvfPqIndex, queries: DataFrame,
@@ -2621,98 +2399,33 @@ def ivfpq_topk_from_index(index: IvfPqIndex, queries: DataFrame,
                                  query_id_col=query_id_col)
 
 
-def _ivfpq_delta_entries(base: IvfPqIndex, new_vectors: DataFrame,
-                         vec_col: str) -> DataFrame:
-    """One delta Arrow pass under the base's FROZEN models (collect
-    the O(k·d) centroid table, assign + encode the batch) — the shared
-    ingest step of :func:`ivfpq_merge_index` and
-    :func:`ivfpq_append_index`, so the two paths cannot diverge."""
-    cent_rows = base.centroids.orderBy("centroid_id").collect()
-    centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    return ivfpq_index(
-        new_vectors.select(F.col(base.id_col).alias("nn_id"), vec_col),
-        centroids, base.codebooks, vec_col=vec_col, id_col="nn_id"
-    ).select("centroid_id", "nn_id", "pq_code")
-
-
 def ivfpq_merge_index(base: IvfPqIndex, new_vectors: DataFrame,
                       vec_col: str = "embedding", *,
                       check_disjoint: bool = True) -> IvfPqIndex:
-    """Fold newly ingested vectors INTO an IVF-PQ index without
-    touching the existing entries: assignment and codes depend only on
-    the (frozen) models, so the merge is one delta Arrow pass + append
-    — merged state == rebuilt state row-for-row.  Same disjoint-ids
-    contract and loud guard as every other family; models are NOT
-    retrained (the drift monitors signal when to)."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-
-    id_col = base.id_col
-    if check_disjoint:
-        check_disjoint_ids(
-            base.entries.select(F.col("nn_id").alias(id_col)),
-            new_vectors, id_col, "ivfpq_merge_index",
-            "duplicate its entry")
-    delta = _ivfpq_delta_entries(base, new_vectors, vec_col)
-    return IvfPqIndex(base.centroids, base.codebooks,
-                      base.entries.select("centroid_id", "nn_id",
-                                          "pq_code")
-                      .unionByName(delta), id_col)
+    """Fold new vectors INTO an IVF-PQ index: assignment and codes
+    depend only on the frozen models, so one delta Arrow pass plus a
+    union equals a rebuild row for row.  Loud disjoint-ids guard; models
+    are NOT retrained."""
+    return ist.merge_index(IVFPQ_SPEC, base, new_vectors, check_disjoint,
+                           vec_col=vec_col)
 
 
 def ivfpq_append_index(spark, path: str, new_vectors: DataFrame,
                        vec_col: str = "embedding",
                        id_col: str = None, *,
                        check_disjoint: bool = True) -> None:
-    """FAST-INGEST append for a persisted IVF-PQ index: one delta
-    Arrow pass (assign + encode under the frozen models), landed as a
-    JOURNALED DELTA (``entries/delta=<k>`` partition dirs + per-delta
-    ``_COMMITTED`` marker) — ingest IO proportional to the batch,
-    crash-atomic, one-scan serves.  Fragmentation accumulates until
-    ``compact_ivfpq_index`` resets it."""
-    from orange3_timeseries_spark.operators.audit import (
-        check_disjoint_ids,
-    )
-    from orange3_timeseries_spark.operators.index_store import (
-        begin_delta,
-        commit_delta,
-        delta_table_path,
-        require_journaled_layout,
-        resolve_index_path,
-    )
-
-    require_journaled_layout(resolve_index_path(path), ("entries",))
-    base = read_ivfpq_index(spark, path, id_col)
-    delta = _ivfpq_delta_entries(base, new_vectors, vec_col)
-    dpath = begin_delta(path)
-    # disjointness gate and delta write overlap (guide §2.6); commit
-    # is still gated on the check, failure aborts the invisible delta
-    from orange3_timeseries_spark.operators.index_store import (
-        abort_delta,
-        run_concurrent,
-    )
-    try:
-        run_concurrent(
-            (lambda: check_disjoint_ids(
-                base.entries.select(F.col("nn_id").alias(base.id_col)),
-                new_vectors, base.id_col, "ivfpq_append_index",
-                "duplicate its entry")) if check_disjoint else None,
-            lambda: (delta.repartition("centroid_id")
-                     .write.mode("overwrite").partitionBy("centroid_id")
-                     .parquet(delta_table_path(dpath, "entries"))))
-    except BaseException:
-        abort_delta(dpath)
-        raise
-    commit_delta(dpath)
+    """FAST-INGEST append: one delta Arrow pass under the frozen models,
+    landed as a JOURNALED DELTA; fragments until
+    :func:`compact_ivfpq_index`."""
+    ist.append_index(IVFPQ_SPEC, spark, path, new_vectors,
+                     check_disjoint, {"id_col": id_col}, vec_col=vec_col)
 
 
 def compact_ivfpq_index(spark, path: str,
                         id_col: str = None) -> None:
-    """Rewrite the current IVF-PQ generation into a fresh one and swap
-    the pointer, folding append deltas back to ~1 file per centroid
-    partition.  Serves are row-identical before/after."""
-    write_ivfpq_index(read_ivfpq_index(spark, path, id_col), path)
+    """Rewrite the current generation into a fresh one (~1 file per
+    centroid partition again); serves are row-identical before/after."""
+    ist.compact_index(IVFPQ_SPEC, spark, path, id_col=id_col)
 
 
 def _train_subspace_codebooks(X, flagged, K: int, ds: int, iters: int):

@@ -49,6 +49,20 @@ def test_linear_values(spark):
     approx_rows(vals, [1.0, 1.0, 3.0, 5.0, 7.0, 7.0])
 
 
+def test_linear_exact_at_epoch_scale(spark):
+    # 2023 timestamps with microsecond gaps: as double epoch seconds the
+    # fill comes out 26.683044487 (sixth decimal off); on integer
+    # microseconds it matches the exact 26.683044506411452
+    times = [dt.datetime(2023, 11, 22, 4, 10, 46, 425955),
+             dt.datetime(2023, 11, 22, 4, 14, 23, 474105),
+             dt.datetime(2023, 11, 22, 4, 30, 16, 153109)]
+    out = interpolate_timeseries(_frame(spark, [3.01, None, 130.59], times),
+                                 "linear")
+    vals = [r["x"] for r in out.df.orderBy("t").collect()]
+    assert abs(vals[1] - 26.683044506411452) < 1e-9
+    assert round(vals[1], 6) == 26.683045
+
+
 def test_nearest_tie_prefers_previous(spark):
     # equidistant gap: scipy kind='nearest' rounds down
     tsf = _frame(spark, [2.0, None, 8.0])
